@@ -1049,10 +1049,7 @@ object Maintenance {
     val deletes = table.deleteEntries(snap)
     if (deletes.isEmpty) return None
     val live = table.liveFiles(m)
-    val affected = live.filter { f =>
-      deletes.exists(d =>
-        d.seqOr0 > f.seqOr0 && d.maxDocId >= f.minDocId && d.minDocId <= f.maxDocId)
-    }
+    val affected = live.filter(f => deletes.exists(_.appliesTo(f)))
     val staged =
       if (affected.isEmpty) Seq.empty
       else {

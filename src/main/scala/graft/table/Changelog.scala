@@ -21,27 +21,35 @@ import org.apache.spark.sql.functions._
  * not change visible rows. Net means per-range, not per-commit: a row
  * inserted and deleted strictly inside the range never appears.
  *
- * Two plans, chosen from metadata alone:
- *  - **Append fast path**: when every data file of `from` survives to `to`
- *    and no new equality-delete keys landed, changes are exactly the rows
- *    of the files added in the range — a manifest set-difference picks the
- *    files and NOTHING ELSE is read. This is the steady-state streaming
- *    ingest case: cost O(new data), zero joins, zero shuffles.
- *  - **Content diff**: otherwise (CoW merge, deletes, MoR keys), diff the
- *    two snapshot scans on a pair of independently-seeded 64-bit content
- *    hashes — two hash anti-joins on (doc_id, h1, h2), each a slim
- *    24-byte-per-row build side that AQE broadcasts when it fits.
- *    O(|from| + |to|) scan; exact for every operation mix up to a
- *    simultaneous two-stream hash collision (~2^-128 per doc), and the
- *    expensive case is precisely the one where the log genuinely rewrote
- *    old files. Both sides are projected into the CURRENT schema by
- *    field-id, so the diff stays well-defined across schema evolution.
+ * One plan, scoped by metadata before any data is read. A data file
+ * whose path is live at both ends is SKIPPED when the set of deletes that
+ * apply to it ([[DataFileMeta.appliesTo]]: higher sequence, overlapping doc
+ * range) is the same at both ends, because then its visible rows are
+ * identical in `from` and `to`. Only the rest is
+ * read, each side with its own snapshot's delete entries:
+ *  - the `from` side: files removed in the range, plus kept files some new
+ *    (or retired) delete applies to;
+ *  - the `to` side: files added in the range, plus the same kept files.
+ * When the `from` side is empty (an append-only range, or `from = None`)
+ * the `to` side IS the changelog: returned as inserts with no join and no
+ * shuffle — the steady-state streaming-ingest case costs O(new data).
+ * Otherwise the two pruned sides are diffed on a pair of
+ * independently-seeded 64-bit content hashes in one full-outer join on
+ * (doc_id, h1, h2): exact for every operation mix up to a simultaneous
+ * two-stream hash collision (~2^-128 per doc), at a cost that follows the
+ * files the range touched, not the table. Both sides are projected into
+ * the CURRENT schema by field-id, so the diff stays well-defined across
+ * schema evolution.
  *
- * Content-diff rows are matched as a SET per (doc_id, content): like
- * [[graft.maintenance.Maintenance.deleteWhereMor]], the diff path assumes
- * the MERGE invariant (one row per doc_id); with duplicate identical rows
- * it reports net set changes, not multiset multiplicities. The append fast
- * path is exact either way.
+ * Duplicate rows: skipping cancels an unchanged file's rows on both sides
+ * exactly (a multiset cancellation), and the join then matches the
+ * remaining rows as a set per (doc_id, content). So a duplicate in a
+ * skipped file can no longer absorb the removal of its copy in a changed
+ * file: that removal surfaces as a delete, where a full-table set diff
+ * reported nothing. On the files the range changed the result therefore
+ * follows multiset, not set, semantics. Like
+ * [[graft.maintenance.Maintenance.deleteWhereMor]], the table contract is
+ * the MERGE invariant (one row per doc_id), under which both coincide.
  */
 object Changelog {
 
@@ -71,72 +79,55 @@ object Changelog {
           "refusing to widen a CDC range to a full-table replay")))
     fromSnap.foreach(f => require(f.snapshotId <= to,
       s"changesBetween: from ${f.snapshotId} is newer than to $to"))
-    if (fromSnap.exists(_.snapshotId == to))
-      return withChangeType(emptyLike(spark, table), lit("insert")).limit(0)
 
     val fromFiles = fromSnap.map(table.manifestEntries).getOrElse(Seq.empty)
     val toFiles = table.manifestEntries(toSnap)
-    val fromPaths = fromFiles.map(_.path).toSet
-    val toPaths = toFiles.map(_.path).toSet
     val fromDeletes = fromSnap.map(table.deleteEntries).getOrElse(Seq.empty)
     val toDeletes = table.deleteEntries(toSnap)
 
-    val appendOnly = fromPaths.subsetOf(toPaths) &&
-      toDeletes.map(_.path).toSet.subsetOf(fromDeletes.map(_.path).toSet)
-    if (appendOnly) {
-      // Files added in the range hold only rows invisible at `from` (they
-      // did not exist) and visible at `to` (equality deletes apply only to
-      // LOWER sequences, and no new delete keys landed) — so they ARE the
-      // changelog, read with `to`'s delete set for exactness.
-      val added = toFiles.filterNot(f => fromPaths.contains(f.path))
-      withChangeType(table.readFiles(spark, added, toDeletes), lit("insert"))
-    } else {
-      // Both scans project their files into the CURRENT schema by field-id
-      // (TokenTable.readFiles), so changes are reported in the reader's
-      // schema and add/drop/rename mid-range never breaks CDC continuity:
-      // a column added in the range reads as null from pre-evolution files,
-      // so untouched rows hash equal and only genuinely-rewritten rows
-      // surface as delete+insert (Iceberg changelog-scan semantics).
-      val oldDf = fromSnap.map(s => table.scan(spark, Some(s.snapshotId)))
-        .getOrElse(emptyLike(spark, table))
-      val newDf = table.scan(spark, Some(to))
-      // Two independently-seeded 64-bit hashes: equality on (_h, _h2) needs
-      // a simultaneous collision of both streams (~2^-128 per doc), making
-      // the "hash-equal but content-differs drops an update" caveat
-      // cryptographically negligible at 24 bytes/row of build side.
-      val dataCols = newDf.columns.toSeq
-      val cols = dataCols.map(col).toIndexedSeq
-      val hash = xxhash64(cols: _*)
-      val hash2 = xxhash64(lit("graft-cdc-seed2") +: cols: _*)
-      // ONE full-outer join on (doc_id, _h, _h2) replaces the former pair of
-      // anti-joins: each snapshot scan is decoded+hashed ONCE (the old shape
-      // evaluated each side twice — once as probe, once as the other side's
-      // build), matched (unchanged) rows drop, and the change label selects
-      // which side's payload survives. At scale this also removes the
-      // build-side collection entirely — both sides stream through one
-      // co-partitioned shuffle instead of four full scans.
-      val keys = Seq("doc_id", "_h", "_h2")
-      val o = oldDf.withColumn("_h", hash).withColumn("_h2", hash2)
-        .withColumn("_o_present", lit(true))
-      val n = newDf.withColumn("_h", hash).withColumn("_h2", hash2)
-        .select(keys.map(col) ++
-          dataCols.filterNot(_ == "doc_id").map(c => col(c).as(s"_n_$c")) :+
-          lit(true).as("_n_present"): _*)
-      val j = o.join(n, keys, "full_outer")
-      val change = when(col("_n_present").isNull, "delete")
-        .when(col("_o_present").isNull, "insert")
-      j.filter(change.isNotNull)
-        .select(dataCols.map {
-          case "doc_id" => col("doc_id")
-          case c => when(col("_n_present").isNull, col(c))
-            .otherwise(col(s"_n_$c")).as(c)
-        } :+ change.as(ChangeTypeCol): _*)
-    }
+    def applicable(f: DataFileMeta, deletes: Seq[DataFileMeta]): Set[String] =
+      deletes.filter(_.appliesTo(f)).map(_.path).toSet
+    val toByPath = toFiles.map(f => f.path -> f).toMap
+    val unchanged = fromFiles.filter(f => toByPath.get(f.path)
+      .exists(g => applicable(f, fromDeletes) == applicable(g, toDeletes)))
+      .map(_.path).toSet
+    val fromRead = fromFiles.filterNot(f => unchanged(f.path))
+    val toRead = toFiles.filterNot(f => unchanged(f.path))
+    // readFiles projects every file into the CURRENT schema by field-id, so
+    // changes are reported in the reader's schema and add/drop/rename
+    // mid-range never breaks CDC continuity: a column added in the range
+    // reads as null from pre-evolution files, so untouched rows hash equal
+    // and only genuinely-rewritten rows surface as delete+insert (Iceberg
+    // changelog-scan semantics).
+    val newDf = table.readFiles(spark, toRead, toDeletes)
+    if (fromRead.isEmpty) return newDf.withColumn(ChangeTypeCol, lit("insert"))
+    val oldDf = table.readFiles(spark, fromRead, fromDeletes)
+    // Two independently-seeded 64-bit hashes: equality on (_h, _h2) needs
+    // a simultaneous collision of both streams (~2^-128 per doc), making
+    // the "hash-equal but content-differs drops an update" caveat
+    // cryptographically negligible at 24 bytes/row of build side.
+    val dataCols = newDf.columns.toSeq
+    val cols = dataCols.map(col).toIndexedSeq
+    val hash = xxhash64(cols: _*)
+    val hash2 = xxhash64(lit("graft-cdc-seed2") +: cols: _*)
+    // ONE full-outer join on (doc_id, _h, _h2): each side is decoded and
+    // hashed once, matched (unchanged) rows drop, and the change label
+    // selects which side's payload survives.
+    val keys = Seq("doc_id", "_h", "_h2")
+    val o = oldDf.withColumn("_h", hash).withColumn("_h2", hash2)
+      .withColumn("_o_present", lit(true))
+    val n = newDf.withColumn("_h", hash).withColumn("_h2", hash2)
+      .select(keys.map(col) ++
+        dataCols.filterNot(_ == "doc_id").map(c => col(c).as(s"_n_$c")) :+
+        lit(true).as("_n_present"): _*)
+    val j = o.join(n, keys, "full_outer")
+    val change = when(col("_n_present").isNull, "delete")
+      .when(col("_o_present").isNull, "insert")
+    j.filter(change.isNotNull)
+      .select(dataCols.map {
+        case "doc_id" => col("doc_id")
+        case c => when(col("_n_present").isNull, col(c))
+          .otherwise(col(s"_n_$c")).as(c)
+      } :+ change.as(ChangeTypeCol): _*)
   }
-
-  private def withChangeType(df: DataFrame, v: org.apache.spark.sql.Column): DataFrame =
-    df.withColumn(ChangeTypeCol, v)
-
-  private def emptyLike(spark: SparkSession, table: TokenTable): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), table.schema)
 }

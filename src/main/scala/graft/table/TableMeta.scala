@@ -80,6 +80,11 @@ final case class DataFileMeta(
   def schemaIdOr0: Int = schemaId.getOrElse(0)
   def seqOr0: Long = addedSeq.getOrElse(0L)
 
+  /** Can this equality-delete entry remove rows of data file `f`? Only when
+    * it is newer (higher sequence) and its doc range overlaps `f`'s. */
+  def appliesTo(f: DataFileMeta): Boolean =
+    seqOr0 > f.seqOr0 && maxDocId >= f.minDocId && minDocId <= f.maxDocId
+
   def partitionValue(name: String): Option[String] = partition.flatMap(_.get(name))
 
   /** May this file contain a row whose source is in `target`? (pruning-safe:

@@ -1203,33 +1203,14 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       .map(st => relativize(root, st.getPath))
     val dirs = top.filter(_.isDirectory).map(_.getPath.toString)
     val dSlices = math.max(1, math.min(math.max(dirs.size, 1), sc.defaultParallelism * 2))
-    // Hadoop's LocalFileSystem pays a per-file `ls -ld` exec to populate the
-    // LocatedFileStatus permissions that listFiles(recursive) returns (~4 ms/
-    // file — 2 min for 33k files); java.nio.Files.walk stats without it. Object
-    // stores / HDFS keep the recursive listFiles, which is their efficient
-    // paged-LIST call.
+    // listParquetFast walks local dirs with java.nio (no per-file `ls -ld`)
+    // and skips files that vanish mid-walk; other filesystems keep their
+    // recursive paged LIST
     val listed = sc.parallelize(dirs, dSlices).flatMap { d =>
       val p = new Path(d)
-      val tfs = p.getFileSystem(confBc.value.value)
-      val buf = scala.collection.mutable.ArrayBuffer[String]()
-      if (tfs.getScheme == "file") {
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(p.toUri.getPath))
-        try walk.forEach { q =>
-          if (q.getFileName.toString.endsWith(".parquet") &&
-              java.nio.file.Files.isRegularFile(q) &&
-              java.nio.file.Files.getLastModifiedTime(q).toMillis < cutoff)
-            buf += relativize(new Path(rootStr), new Path(q.toUri))
-        } finally walk.close()
-      } else {
-        val it = tfs.listFiles(p, true)
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.isFile && st.getPath.getName.endsWith(".parquet") &&
-              st.getModificationTime < cutoff)
-            buf += relativize(new Path(rootStr), st.getPath)
-        }
+      listParquetFast(p.getFileSystem(confBc.value.value), p).collect {
+        case (q, _, mtime) if mtime < cutoff => relativize(new Path(rootStr), q)
       }
-      buf
     } ++ sc.parallelize(loose, 1)
     tick("plan")
     // prefix-protected staging dirs (unparseable ledger units — conservative
@@ -1527,64 +1508,86 @@ object TokenTable {
     * silently overwrites the first — a lost commit (observed as a vanished
     * merge snapshot under concurrent writers). link(2) is the atomic
     * no-clobber primitive there: createLink fails with
-    * FileAlreadyExistsException iff dst exists, atomically. Non-local
-    * filesystems keep exists+rename — HDFS rename refuses to clobber
-    * (returns false) and object-store renames are copy+delete with their
-    * own semantics. `tmp` is always cleaned up, win or lose. */
+    * FileAlreadyExistsException iff dst exists, atomically. A local mount
+    * without hard links (CIFS, FAT, some NFS setups) falls back to
+    * exists+rename rather than failing every commit. Non-local filesystems
+    * keep exists+rename — HDFS rename refuses to clobber (returns false)
+    * and object-store renames are copy+delete with their own semantics.
+    * `tmp` is always cleaned up, win, lose or throw. */
   private[table] def firstWinsPublish(fs: FileSystem, tmp: Path, dst: Path): Boolean =
-    if (fs.getScheme == "file") {
-      val t = java.nio.file.Paths.get(tmp.toUri.getPath)
-      val d = java.nio.file.Paths.get(dst.toUri.getPath)
-      val won =
-        try { java.nio.file.Files.createLink(d, t); true }
-        catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      if (won) {
-        // carry the checksum sidecar (ChecksumFileSystem ".<name>.crc") so
-        // the published file stays verified; best-effort — a missing crc
-        // only disables verification for this one file
-        try {
-          val tc = t.resolveSibling("." + t.getFileName + ".crc")
-          val dc = d.resolveSibling("." + d.getFileName + ".crc")
-          if (java.nio.file.Files.exists(tc)) java.nio.file.Files.createLink(dc, tc)
-        } catch { case _: Throwable => () }
-      }
-      fs.delete(tmp, false) // unlinks tmp's name (+its crc); the linked dst survives
-      won
-    } else {
-      val won = !fs.exists(dst) && fs.rename(tmp, dst)
-      if (!won) fs.delete(tmp, false)
-      won
+    try {
+      val linked = if (fs.getScheme == "file") linkNoClobber(tmp, dst) else None
+      linked.getOrElse(!fs.exists(dst) && fs.rename(tmp, dst))
+    } finally fs.delete(tmp, false) // unlinks tmp's name (+its crc); a linked dst survives
+
+  /** Some(won) from an atomic link(2) publish; None when the filesystem
+    * cannot hard-link. */
+  private def linkNoClobber(tmp: Path, dst: Path): Option[Boolean] = {
+    val t = java.nio.file.Paths.get(tmp.toUri.getPath)
+    val d = java.nio.file.Paths.get(dst.toUri.getPath)
+    try {
+      graft.maintenance.Failpoints.hitCallback("table.publish.link")
+      java.nio.file.Files.createLink(d, t)
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException => return Some(false)
+      case _: UnsupportedOperationException | _: java.io.IOException => return None
     }
+    // carry the checksum sidecar (ChecksumFileSystem ".<name>.crc") so the
+    // published file stays verified; best-effort — a missing crc only
+    // disables verification for this one file
+    try {
+      val tc = t.resolveSibling("." + t.getFileName + ".crc")
+      val dc = d.resolveSibling("." + d.getFileName + ".crc")
+      if (java.nio.file.Files.exists(tc)) java.nio.file.Files.createLink(dc, tc)
+    } catch { case _: Throwable => () }
+    Some(true)
+  }
 
   /** Recursive `.parquet` listing of a directory tree. Hadoop's
     * LocalFileSystem pays a per-file `ls -ld` exec to populate the
     * LocatedFileStatus permissions that listFiles(recursive) returns
     * (~4 ms/file without native libs — 0.7 s per 80-file partitioned
-    * commit); java.nio walks without it. Non-local filesystems keep
+    * commit); java.nio walks without it, reading each entry's attributes
+    * once. An entry deleted between its directory's listing and its visit
+    * (a concurrent writer retiring a replaced file) is skipped; any other
+    * I/O error fails the listing. Non-local filesystems keep
     * listFiles(recursive), their efficient paged-LIST call. Returns
     * (path, length, mtimeMillis). */
-  private[table] def listParquetFast(fs: FileSystem, dir: Path): Seq[(Path, Long, Long)] = {
-    val buf = scala.collection.mutable.ArrayBuffer[(Path, Long, Long)]()
+  private[table] def listParquetFast(fs: FileSystem, dir: Path): Seq[(Path, Long, Long)] =
     if (fs.getScheme == "file") {
       val base = java.nio.file.Paths.get(dir.toUri.getPath)
-      if (java.nio.file.Files.exists(base)) {
-        val walk = java.nio.file.Files.walk(base)
-        try walk.forEach { q =>
-          if (q.getFileName != null && q.getFileName.toString.endsWith(".parquet") &&
-              java.nio.file.Files.isRegularFile(q))
-            buf += ((new Path(q.toUri), java.nio.file.Files.size(q),
-              java.nio.file.Files.getLastModifiedTime(q).toMillis))
-        } finally walk.close()
-      }
+      val walk = new ParquetWalk // a missing `dir` lists empty, like a vanished entry
+      java.nio.file.Files.walkFileTree(base, walk)
+      walk.found.toSeq
     } else {
+      val buf = scala.collection.mutable.ArrayBuffer[(Path, Long, Long)]()
       val it = fs.listFiles(dir, true)
       while (it.hasNext) {
         val st = it.next()
         if (st.isFile && st.getPath.getName.endsWith(".parquet"))
           buf += ((st.getPath, st.getLen, st.getModificationTime))
       }
+      buf.toSeq
     }
-    buf.toSeq
+
+  /** The local walk behind [[listParquetFast]]: collects regular `.parquet`
+    * files from the attributes the walk already read, skips entries that
+    * vanished before their visit, rethrows every other I/O error. */
+  private[table] final class ParquetWalk extends java.nio.file.SimpleFileVisitor[java.nio.file.Path] {
+    import java.nio.file.{FileVisitResult, NoSuchFileException, Path => NioPath}
+    val found = scala.collection.mutable.ArrayBuffer[(Path, Long, Long)]()
+    override def visitFile(
+        q: NioPath, a: java.nio.file.attribute.BasicFileAttributes): FileVisitResult = {
+      graft.maintenance.Failpoints.hitCallback("table.list.visit")
+      if (a.isRegularFile && q.getFileName.toString.endsWith(".parquet"))
+        found += ((new Path(q.toUri), a.size, a.lastModifiedTime.toMillis))
+      FileVisitResult.CONTINUE
+    }
+    override def visitFileFailed(q: NioPath, e: java.io.IOException): FileVisitResult =
+      e match {
+        case _: NoSuchFileException => FileVisitResult.CONTINUE
+        case _ => throw e
+      }
   }
 
   private[table] def relativize(root: Path, p: Path): String = {

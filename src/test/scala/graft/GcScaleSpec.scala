@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.gen.SequenceGen
-import graft.maintenance.Maintenance
+import graft.maintenance.{Failpoints, Maintenance}
 import graft.table.{DataFileMeta, TokenTable}
 
 /** Reachability GC at file counts where a driver-side manifest parse +
@@ -195,5 +195,25 @@ class GcScaleSpec extends SparkSpec {
     t.removeOrphans(0)
     assert(t.scan(spark).count() == before, "GC broke the pending-delete anti-join")
     assert(t.metadata.currentSnapshot.get.deletes.nonEmpty)
+  }
+
+  test("distributed GC walk skips files deleted while it lists them") {
+    val root = tmpDir("gc-vanish") + "/tbl"
+    val t = fabricate(root, nReachable = 400, nOrphans = 40, nManifests = 4)
+    t.updateProperties(Map("gc.distributed-threshold" -> "1"))
+    val extra = Paths.get(root, "data/orphan-b")
+    Files.createDirectories(extra)
+    (0 until 10).foreach(i => Files.createFile(extra.resolve(s"o$i.parquet")))
+    // a concurrent writer retiring files mid-listing: at the first visited
+    // file, remove one orphan directory and half of another
+    Failpoints.armCallback("table.list.visit") { () =>
+      Files.list(extra).forEach(p => Files.deleteIfExists(p))
+      Files.deleteIfExists(extra)
+      (0 until 20).foreach(i => Files.deleteIfExists(Paths.get(root, entry("orphan", i).path)))
+    }
+    try t.removeOrphans(0) finally Failpoints.reset()
+    assert(Files.list(Paths.get(root, "data/live")).count() == 400)
+    assert(!Files.exists(extra))
+    assert(Files.list(Paths.get(root, "data/orphan")).count() == 0)
   }
 }
