@@ -4,9 +4,17 @@ import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Injectable clock — mirrors the reference's frozen-time golden tests
   * (reference tests/integration/test_pipeline_and_data_interpretation.py:61-62). */
@@ -51,6 +59,21 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
 
   /** Test hook: cached manifest-list count (must track retained history). */
   private[graft] def manifestListCacheSize: Int = manifestListCache.size
+
+  /** Key sets of equality-delete files by path, least recently used first.
+    * Delete files are immutable, so entries never go stale; [[deleteKeys]]
+    * evicts while the cached files' bytes exceed the session's broadcast
+    * threshold, and [[retainDeleteKeys]] drops files no retained snapshot
+    * references. Guarded by its own monitor, like `deleteKeyBytes`. */
+  private val deleteKeyCache =
+    new java.util.LinkedHashMap[String, CachedKeys](16, 0.75f, true)
+  private var deleteKeyBytes = 0L
+
+  /** Test hook: (paths, total file bytes) of the cached delete key sets. */
+  private[graft] def deleteKeyCacheState: (Set[String], Long) = deleteKeyCache.synchronized {
+    import scala.jdk.CollectionConverters._
+    (deleteKeyCache.keySet.asScala.toSet, deleteKeyBytes)
+  }
 
   @volatile private var meta: TableMetadata = loadCurrentMetadata()
 
@@ -118,6 +141,7 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     val referenced = m.snapshots.flatMap(_.manifestList).toSet
     manifestListCache.keysIterator.foreach(k =>
       if (!referenced.contains(k)) manifestListCache.remove(k))
+    retainDeleteKeys(out)
     out
   }
 
@@ -167,13 +191,14 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     s.manifests.flatMap(m => TableJson.readManifest(readString(fs, new Path(metadataDir, m.path))))
 
   /** All live data files of a snapshot (paths relative to table root). */
-  def liveFiles(snapshotId: Option[Long] = None): Seq[DataFileMeta] = {
-    val snap = snapshotId match {
-      case Some(id) => meta.snapshot(id).getOrElse(sys.error(s"unknown snapshot $id"))
-      case None     => meta.currentSnapshot.getOrElse(sys.error("table has no snapshot"))
+  def liveFiles(snapshotId: Option[Long] = None): Seq[DataFileMeta] =
+    manifestEntries(snapshotIn(meta, snapshotId))
+
+  private def snapshotIn(m: TableMetadata, snapshotId: Option[Long]): Snapshot =
+    snapshotId match {
+      case Some(id) => m.snapshot(id).getOrElse(sys.error(s"unknown snapshot $id"))
+      case None     => m.currentSnapshot.getOrElse(sys.error("table has no snapshot"))
     }
-    manifestEntries(snap)
-  }
 
   // ---- snapshot-consistent planning views -------------------------------
   // A maintenance planner must derive EVERY view it plans from (live files,
@@ -182,7 +207,10 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
   // open a race: a merge-on-read commit landing between them makes the
   // planned delete-path set include the new delete while the victim set
   // predates its appended file — commit validation then passes and the
-  // rewrite commits a second live copy of the upserted key.
+  // rewrite commits a second live copy of the upserted key. Readers
+  // ([[scan]], [[lookup]]) follow the same rule: with files and deletes from
+  // two reads, that commit masks an updated key's old row while its new
+  // file is still missing, and the key reads as absent.
 
   /** Live data files of `m`'s current snapshot. */
   def liveFiles(m: TableMetadata): Seq[DataFileMeta] =
@@ -212,6 +240,17 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       // sentinel value (a \uffff upper bound would wrongly drop files whose
       // minDocId sorts above it, e.g. supplementary-plane ids)
       docIdLo: Option[String] = None, docIdHi: Option[String] = None,
+      nTokLo: Option[Int] = None, nTokHi: Option[Int] = None): Seq[DataFileMeta] =
+    planFilesIn(meta, snapshotId, docIdRange, sourceIn, nTokRange,
+      docIdLo, docIdHi, nTokLo, nTokHi)
+
+  private def planFilesIn(
+      m: TableMetadata,
+      snapshotId: Option[Long],
+      docIdRange: Option[(String, String)],
+      sourceIn: Option[Set[String]],
+      nTokRange: Option[(Int, Int)],
+      docIdLo: Option[String] = None, docIdHi: Option[String] = None,
       nTokLo: Option[Int] = None, nTokHi: Option[Int] = None): Seq[DataFileMeta] = {
     val dLo = (docIdLo.toSeq ++ docIdRange.map(_._1)).maxOption
     val dHi = (docIdHi.toSeq ++ docIdRange.map(_._2)).minOption
@@ -220,8 +259,8 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     // truncate(n_tok, w) partition values allow stats-free exact range
     // pruning: a file whose tuple records truncate value v holds only rows
     // with n_tok in [v, v + w)
-    val truncFields = meta.spec.filter(f => f.transform == "truncate" && f.column == "n_tok")
-    liveFiles(snapshotId).filter { f =>
+    val truncFields = m.spec.filter(f => f.transform == "truncate" && f.column == "n_tok")
+    manifestEntries(snapshotIn(m, snapshotId)).filter { f =>
       dLo.forall(lo => f.maxDocId >= lo) && dHi.forall(hi => f.minDocId <= hi) &&
       // identity-partition value beats stats when recorded (exact, not a range)
       sourceIn.forall(s => f.partitionValue("source") match {
@@ -244,10 +283,12 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     * bucket(doc_id, N)-partitioned table a point lookup reads ~1/N of the
     * range-matching files; at 10^12 sequences this is the difference between
     * a key probe and a table scan. */
-  def planFilesForKey(docId: String): Seq[DataFileMeta] = {
-    val bucketFields = meta.spec.filter(f => f.transform == "bucket" && f.column == "doc_id")
-    val docIdType = schema("doc_id").dataType
-    liveFiles().filter { f =>
+  def planFilesForKey(docId: String): Seq[DataFileMeta] = planFilesForKey(meta, docId)
+
+  private def planFilesForKey(m: TableMetadata, docId: String): Seq[DataFileMeta] = {
+    val bucketFields = m.spec.filter(f => f.transform == "bucket" && f.column == "doc_id")
+    val docIdType = schemaOf(m)("doc_id").dataType
+    liveFiles(m).filter { f =>
       f.minDocId <= docId && f.maxDocId >= docId &&
       // spec evolution safety: the tuple key carries the bucket count, so a
       // file written under a different n records a different key name,
@@ -258,30 +299,36 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     }
   }
 
-  /** Point lookup through bucket + range pruning (pending MoR deletes
-    * applied like any scan). */
-  def lookup(spark: SparkSession, docId: String): DataFrame =
-    readFiles(spark, planFilesForKey(docId), deletesOf(None))
-      .filter(col("doc_id") === docId)
+  /** Point lookup through bucket + range pruning. Pending deletes mask
+    * whole files: a candidate file is dropped when a delete that applies to
+    * it holds `docId`, and the rest read with no delete applied — when
+    * every candidate is masked, no Spark job runs. Delete sets too large
+    * for the driver (see [[readFiles]]) are applied like any scan. */
+  def lookup(spark: SparkSession, docId: String): DataFrame = {
+    val m = meta
+    graft.maintenance.Failpoints.hitCallback("table.read.after-meta")
+    val files = planFilesForKey(m, docId)
+    val deletes = deleteEntriesOf(m).filter(d =>
+      d.minDocId <= docId && d.maxDocId >= docId && files.exists(d.appliesTo))
+    val read = driverKeyLimit(spark, deletes) match {
+      case Some(limit) =>
+        val key = UTF8String.fromString(docId)
+        readAt(spark, m, files.filterNot(f => deletes.exists(d =>
+          d.appliesTo(f) && deleteKeys(d, limit).keys.contains(key))), Seq.empty)
+      case None => readAt(spark, m, files, deletes)
+    }
+    read.filter(col("doc_id") === docId)
+  }
 
   /** Delete file paths pending on the current snapshot — capture at
     * planning time (adjacent to the liveFiles() call, same metadata view)
     * and pass to commit(readDeletePaths = …) so a rewrite aborts if new
     * equality deletes landed mid-flight. */
-  def currentDeletePaths(): Set[String] =
-    meta.currentSnapshot.map(_.deletes.map(_.path).toSet).getOrElse(Set.empty)
+  def currentDeletePaths(): Set[String] = deletePathsOf(meta)
 
   /** Equality-delete key entries pending on a snapshot (merge-on-read). */
   def deleteEntries(s: Snapshot): Seq[DataFileMeta] =
     s.deletes.flatMap(m => TableJson.readManifest(readString(fs, new Path(metadataDir, m.path))))
-
-  private def deletesOf(snapshotId: Option[Long]): Seq[DataFileMeta] = {
-    val snap = snapshotId match {
-      case Some(id) => meta.snapshot(id)
-      case None     => meta.currentSnapshot
-    }
-    snap.map(deleteEntries).getOrElse(Seq.empty)
-  }
 
   def scan(
       spark: SparkSession,
@@ -289,8 +336,10 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       docIdRange: Option[(String, String)] = None,
       sourceIn: Option[Set[String]] = None,
       nTokRange: Option[(Int, Int)] = None): DataFrame = {
-    val files = planFiles(snapshotId, docIdRange, sourceIn, nTokRange)
-    readFiles(spark, files, deletesOf(snapshotId))
+    val m = meta
+    graft.maintenance.Failpoints.hitCallback("table.read.after-meta")
+    val files = planFilesIn(m, snapshotId, docIdRange, sourceIn, nTokRange)
+    readAt(spark, m, files, deleteEntries(snapshotIn(m, snapshotId)))
   }
 
   /** Read data files, projecting every file into the *current* schema by
@@ -298,61 +347,69 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     * schema version keep their physical column names; we resolve each
     * current field to the physical name its id had at write time, or null
     * for columns added since. Single-schema tables take the fast path. */
-  def readFiles(spark: SparkSession, files: Seq[DataFileMeta]): DataFrame =
-    readFiles(spark, files, deletesOf(None))
+  def readFiles(spark: SparkSession, files: Seq[DataFileMeta]): DataFrame = {
+    val m = meta
+    readAt(spark, m, files, deleteEntriesOf(m))
+  }
 
   /**
    * Read data files with merge-on-read equality deletes applied: rows of a
    * data file are dropped when their `doc_id` appears in a delete key file
-   * with a HIGHER sequence (TableMeta.addedSeq). Because every rewrite path
-   * (compact / cluster / MERGE) reads its victims through here, a rewrite
-   * can never resurrect deleted rows — the rewritten file gets a fresh
-   * higher sequence the old deletes no longer apply to, and the deleted rows
-   * were filtered on the way in (deletes materialize for free as files get
-   * touched). The anti-join build side is the delete key set — AQE
-   * broadcasts it when it fits, shuffles otherwise; no hint.
+   * that applies to it ([[DataFileMeta.appliesTo]]: HIGHER sequence,
+   * overlapping doc range). Because every rewrite path (compact / cluster /
+   * MERGE) reads its victims through here, a rewrite can never resurrect
+   * deleted rows — the rewritten file gets a fresh higher sequence the old
+   * deletes no longer apply to, and the deleted rows were filtered on the
+   * way in (deletes materialize for free as files get touched).
+   *
+   * Files are grouped into tiers by the set of deletes that apply to them;
+   * a tier no delete applies to reads plain. A tier whose delete files
+   * total at most `spark.sql.autoBroadcastJoinThreshold` bytes (the size
+   * at which Spark itself would collect the keys to the driver for a
+   * broadcast join) is filtered by [[KeyNotDeleted]] — `doc_id IS NULL OR
+   * doc_id NOT IN keys`, the rows a left anti-join keeps — on key sets
+   * read once per delete file on the driver into this table's cache and
+   * broadcast once, so the read costs no extra Spark job. A larger tier,
+   * or any tier when the threshold is negative, anti-joins the key files
+   * read by Spark.
    */
   def readFiles(
       spark: SparkSession, files: Seq[DataFileMeta],
+      deletes: Seq[DataFileMeta]): DataFrame = readAt(spark, meta, files, deletes)
+
+  private def readAt(
+      spark: SparkSession, m: TableMetadata, files: Seq[DataFileMeta],
       deletes: Seq[DataFileMeta]): DataFrame = {
+    val currentSchema = schemaOf(m)
     if (files.isEmpty)
-      return spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+      return spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), currentSchema)
     if (deletes.nonEmpty) {
-      // Group data files by the set of deletes applying to them (distinct
-      // sequence tiers — few in practice: compaction collapses tiers), apply
-      // one anti-join per tier, union. Delete key files whose doc range
-      // cannot intersect a tier's files are pruned from that tier's key set.
-      val tiers = files.groupBy { f =>
-        deletes.filter(_.seqOr0 > f.seqOr0).map(_.path).toSet
-      }.toSeq.sortBy(_._1.size)
-      val frames = tiers.map { case (delPaths, fs0) =>
-        val plain = readFiles(spark, fs0, Seq.empty)
-        if (delPaths.isEmpty) plain
-        else {
-          val lo = fs0.map(_.minDocId).min
-          val hi = fs0.map(_.maxDocId).max
-          val applicable = deletes.filter(d =>
-            delPaths.contains(d.path) && d.maxDocId >= lo && d.minDocId <= hi)
-          if (applicable.isEmpty) plain
-          else {
+      val tiers = files.groupBy(f => deletes.filter(_.appliesTo(f))).toSeq.sortBy(_._1.size)
+      val frames = tiers.map { case (applicable, fs0) =>
+        val plain = readAt(spark, m, fs0, Seq.empty)
+        if (applicable.isEmpty) plain
+        else driverKeyLimit(spark, applicable) match {
+          case Some(limit) =>
+            val keys = applicable.map(deleteKeys(_, limit).broadcast(spark.sparkContext))
+            plain.filter(ColumnBridge.column(
+              KeyNotDeleted(ColumnBridge.expression(col("doc_id")), keys)))
+          case None =>
             val keys = spark.read
               .schema(StructType(Seq(StructField("doc_id", StringType))))
               .parquet(applicable.map(d => new Path(root, d.path).toString): _*)
             plain.join(keys, Seq("doc_id"), "left_anti")
-          }
         }
       }
       return frames.reduce(_.unionByName(_))
     }
-    val current = meta.schemaVersion(meta.schemaIdNow)
-    val currentSchema = schema
+    val current = m.schemaVersion(m.schemaIdNow)
     val groups = files.groupBy(_.schemaIdOr0).toSeq.sortBy(_._1)
     val frames = groups.map { case (sid, fs) =>
       val paths = fs.map(f => new Path(root, f.path).toString)
-      if (sid == meta.schemaIdNow) {
+      if (sid == m.schemaIdNow) {
         spark.read.schema(currentSchema).parquet(paths: _*)
       } else {
-        val ver = meta.schemaVersion(sid)
+        val ver = m.schemaVersion(sid)
         val physSchema = DataType.fromJson(ver.schemaJson).asInstanceOf[StructType]
         val idToPhys: Map[Int, String] = ver.fieldIds.map(_.swap)
         val raw = spark.read.schema(physSchema).parquet(paths: _*)
@@ -370,7 +427,91 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     frames.reduce(_.unionByName(_))
   }
 
-  def schema: StructType = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
+  /** The session's broadcast threshold — the byte bound of the key cache —
+    * when `deletes` may be applied on the driver: the threshold is
+    * non-negative and at least the delete files' total size. None means
+    * they anti-join. */
+  private def driverKeyLimit(spark: SparkSession, deletes: Seq[DataFileMeta]): Option[Long] =
+    Some(spark.sessionState.conf.autoBroadcastJoinThreshold)
+      .filter(limit => limit >= 0 && deletes.map(_.bytes).sum <= limit)
+
+  /** The non-null keys of delete file `d` as `UTF8String`s (the form a
+    * string column's values take inside Catalyst), from the cache or read on the
+    * driver; then evicts least recently used entries while the cached
+    * files exceed `limit` bytes (the session's threshold may have shrunk
+    * since they were cached). */
+  private def deleteKeys(d: DataFileMeta, limit: Long): CachedKeys = {
+    val hit = deleteKeyCache.synchronized(deleteKeyCache.get(d.path))
+    val keys = if (hit != null) hit else new CachedKeys(d.bytes, readDeleteKeys(d))
+    deleteKeyCache.synchronized {
+      if (hit == null && deleteKeyCache.put(d.path, keys) == null)
+        deleteKeyBytes += d.bytes
+      val eldest = deleteKeyCache.values.iterator
+      while (deleteKeyBytes > limit && eldest.hasNext) {
+        deleteKeyBytes -= eldest.next().bytes
+        eldest.remove()
+      }
+    }
+    keys
+  }
+
+  /** Reads the `doc_id` column of one delete key file with parquet-hadoop
+    * on the driver — no Spark job. */
+  private def readDeleteKeys(d: DataFileMeta): Set[Any] = {
+    import org.apache.parquet.column.impl.ColumnReadStoreImpl
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(root, d.path), fs.getConf))
+    try {
+      val file = reader.getFooter.getFileMetaData
+      val column = file.getSchema.getColumnDescription(Array("doc_id"))
+      // values are pulled from the column reader directly; the converter
+      // tree only has to exist
+      val converter = new GroupConverter {
+        def getConverter(i: Int): Converter = new PrimitiveConverter {}
+        def start(): Unit = ()
+        def end(): Unit = ()
+      }
+      val keys = Set.newBuilder[Any]
+      var pages = reader.readNextRowGroup()
+      while (pages != null) {
+        val values = new ColumnReadStoreImpl(pages, converter, file.getSchema, file.getCreatedBy)
+          .getColumnReader(column)
+        // doc_id is not repeated: one value per row
+        var i = 0L
+        while (i < pages.getRowCount) {
+          if (values.getCurrentDefinitionLevel == column.getMaxDefinitionLevel)
+            keys += UTF8String.fromBytes(values.getBinary.getBytesUnsafe.clone())
+          values.consume()
+          i += 1
+        }
+        pages = reader.readNextRowGroup()
+      }
+      keys.result()
+    } finally reader.close()
+  }
+
+  /** Drops cached key sets of delete files no snapshot of `m` references
+    * (retired by materialization, then expired). */
+  private def retainDeleteKeys(m: TableMetadata): Unit =
+    if (deleteKeyCache.synchronized(!deleteKeyCache.isEmpty)) {
+      val live = m.snapshots.flatMap(_.deletes).map(_.path).distinct
+        .flatMap(p => TableJson.readManifest(readString(fs, new Path(metadataDir, p))))
+        .map(_.path).toSet
+      deleteKeyCache.synchronized {
+        val it = deleteKeyCache.entrySet.iterator
+        while (it.hasNext) {
+          val e = it.next()
+          if (!live.contains(e.getKey)) {
+            deleteKeyBytes -= e.getValue.bytes
+            it.remove()
+          }
+        }
+      }
+    }
+
+  def schema: StructType = schemaOf(meta)
 
   // ------------------------------------------------------- schema evolution
 
@@ -456,7 +597,6 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     * all-identity and cost nothing at runtime. */
   private def conformToSchema(df: DataFrame, schema: StructType): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     // nullability is declarative here (writes never enforced it; parquet
     // physical types are what pinned-schema readers check) — compare and
     // cast on nullability-relaxed types throughout
@@ -1020,7 +1160,9 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
             .getOrElse(Seq.empty)).toSet
       val next = base.copy(snapshots = base.snapshots.filter(s => keepIds.contains(s.snapshotId)))
       tryCommitVersion(baseVersion + 1, next).foreach { committed =>
-        meta = committed; return committed
+        meta = committed
+        retainDeleteKeys(committed)
+        return committed
       }
       attempt += 1
     }
@@ -1281,6 +1423,23 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
 }
 
 object TokenTable {
+
+  /** One delete file's cached key set and the file's size in bytes. Scans
+    * ship the set to tasks as a broadcast made once per SparkContext: with
+    * the set itself in the plan, every task would deserialize all of it. */
+  private final class CachedKeys(val bytes: Long, val keys: Set[Any]) {
+    private var shipped: Option[(SparkContext, Broadcast[Set[Any]])] = None
+    def broadcast(sc: SparkContext): Broadcast[Set[Any]] = synchronized {
+      shipped.collect { case (`sc`, b) => b }.getOrElse {
+        val b = sc.broadcast(keys)
+        shipped = Some((sc, b))
+        b
+      }
+    }
+  }
+
+  private def schemaOf(m: TableMetadata): StructType =
+    DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
 
   /** Highest metadata format version this build reads/writes. 1 = inline
     * per-snapshot manifest lists; 2 = lists spilled to snap-* files with a
@@ -1608,4 +1767,38 @@ object TokenTable {
     try out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
+}
+
+/** Keeps a row unless its key is in one of the `deleted` key sets (values
+  * as Catalyst holds them, e.g. `UTF8String`): `key IS NULL OR NOT (key IN
+  * deleted)`, exactly the rows a left anti-join on the key keeps. The sets
+  * travel as broadcasts, and their identity stands in for their contents
+  * in plan equality and plan strings, so planning and task set-up cost the
+  * same for ten keys as for a million. */
+case class KeyNotDeleted(child: Expression, deleted: Seq[Broadcast[Set[Any]]])
+    extends UnaryExpression with Predicate {
+  @transient private lazy val sets = deleted.map(_.value)
+
+  def keeps(key: Any): Boolean = !sets.exists(_.contains(key))
+
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any = {
+    val key = child.eval(input)
+    key == null || keeps(key)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("keyNotDeleted", this)
+    val c = child.genCode(ctx)
+    ev.copy(
+      code = code"""
+        ${c.code}
+        boolean ${ev.value} = ${c.isNull} || $self.keeps(${c.value});
+      """,
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): KeyNotDeleted =
+    copy(child = newChild)
 }

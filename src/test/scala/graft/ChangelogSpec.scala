@@ -135,14 +135,17 @@ class ChangelogSpec extends SparkSpec {
       .localCheckpoint()
     Maintenance.mergeMor(spark, t, upd)
     val m = t.metadata
-    val added = (t.liveFiles(m).map(_.path) ++ t.deleteEntriesOf(m).map(_.path)).toSet --
-      seed.map(_.path)
-    assert(added.nonEmpty)
+    val addedData = t.liveFiles(m).map(_.path).toSet -- seed.map(_.path)
+    val addedDeletes = t.deleteEntriesOf(m).map(_.path).toSet
+    assert(addedData.nonEmpty && addedDeletes.nonEmpty)
     val ch = Changelog.changesBetween(spark, t, Some(s0))
+    // Spark reads data files; the pending delete's keys are loaded by the
+    // driver (its key file is far below the broadcast threshold)
     val read = ch.inputFiles.map(u => u.substring(u.indexOf("/tbl/") + 5)).toSet
     seed.filterNot(_ == target).foreach(f =>
       assert(!read.contains(f.path), s"untouched file ${f.path} was read"))
-    assert(read == added + target.path)
+    assert(read == addedData + target.path)
+    assert(t.deleteKeyCacheState._1 == addedDeletes)
     assert(types(ch) == Map("delete" -> 10L, "insert" -> 10L))
   }
 

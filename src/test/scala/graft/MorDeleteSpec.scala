@@ -131,6 +131,14 @@ class MorDeleteSpec extends SparkSpec {
   }
 
   test("model check: random append/MoR-delete/compact/materialize interleavings match a map model") {
+    modelCheck()
+  }
+
+  test("model check under anti-join deletes: interleavings match a map model") {
+    withJoinDeletes(modelCheck())
+  }
+
+  private def modelCheck(): Unit = {
     // The sequence-number semantics under arbitrary interleaving, checked
     // against the obvious in-memory model: a Map(doc_id -> n_tok) where
     // append overwrites... no — append ADDS rows (CREATE semantics); this
@@ -181,6 +189,44 @@ class MorDeleteSpec extends SparkSpec {
             s"mismatched=${model.collect { case (k, v) if got.get(k).exists(_ != v) => k }.take(5)}")
       }
     }
+  }
+
+  test("delete key cache stays within its byte bound and drops retired delete files") {
+    val t = TokenTable.create(spark, tmpDir("mor-cache") + "/tbl")
+    t.commit("append", t.stageWrite(SequenceGen.sequences(spark, 2000)
+      .repartitionByRange(8, col("doc_id")), "seed"))
+    val ranges = t.liveFiles().sortBy(_.minDocId).map(f => (f.minDocId, f.maxDocId))
+    val ids = t.scan(spark).select("doc_id").collect().map(_.getString(0)).sorted
+    // five keys inside each file's key range: eight single-delete tiers
+    ranges.foreach { case (lo, hi) =>
+      val inFile = ids.filter(k => k >= lo && k <= hi)
+      Maintenance.deleteWhereMor(spark, t, Maintenance.DocIdBetween(lo, inFile(4)))
+    }
+    val expected = checksum(t.scan(spark))
+    val deletes = t.deleteEntriesOf(t.metadata)
+    assert(deletes.size == 8)
+    val bound = deletes.map(_.bytes).max * 3
+    assert(deletes.map(_.bytes).sum > bound)
+    // `t` cached all eight under the default threshold; a cold instance
+    // fills up under the small one
+    val cold = TokenTable.load(spark, t.root.toString)
+    withConf("spark.sql.autoBroadcastJoinThreshold", bound.toString) {
+      Seq(t, cold).foreach { tt =>
+        assert(checksum(tt.scan(spark)) == expected)
+        ranges.foreach { case (lo, _) => assert(tt.lookup(spark, lo).count() == 0) }
+      }
+    }
+    Seq(t, cold).foreach { tt =>
+      val (paths, bytes) = tt.deleteKeyCacheState
+      assert(paths.nonEmpty && bytes <= bound, s"${paths.size} key sets, $bytes bytes > $bound")
+      assert(bytes == deletes.filter(d => paths.contains(d.path)).map(_.bytes).sum)
+    }
+    // retired by materialization, then expired: no cached key set survives
+    assert(checksum(t.scan(spark)) == expected)
+    Maintenance.materializeDeletes(spark, t)
+    t.expireSnapshots(retainLast = 1)
+    assert(t.deleteKeyCacheState == ((Set.empty[String], 0L)))
+    assert(checksum(t.scan(spark)) == expected)
   }
 
   test("CoW deleteWhere and MoR deleteWhereMor agree row-for-row") {

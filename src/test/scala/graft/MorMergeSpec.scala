@@ -162,6 +162,102 @@ class MorMergeSpec extends SparkSpec {
     assert(t.scan(spark).count() == 1000)
   }
 
+  /** Stacked MoR merges over one table, with the model of `source` per
+    * key they leave: (table root, model, keys by class). */
+  private lazy val stacked: (String, Map[String, String], Map[String, Seq[String]]) = {
+    import spark.implicits._
+    val t = fresh("mor-lookups")
+    val ids = t.scan(spark).select("doc_id").collect().map(_.getString(0)).sorted.toIndexedSeq
+    var model = t.scan(spark).select("doc_id", "source").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    def merge(rows: Seq[(String, String, String)]): Unit = {
+      Maintenance.mergeMor(spark, t, rows.map { case (k, src, op) => (k, Seq(1, 2), 2, src, op) }
+        .toDF("doc_id", "tokens", "n_tok", "source", "_op"))
+      rows.foreach { case (k, src, op) => if (op == "upsert") model += k -> src else model -= k }
+    }
+    val updated = ids.slice(100, 110)
+    // below every appended file's key range: only seed files hold them
+    val deleted = ids.slice(30, 40)
+    val reinserted = ids.slice(500, 505)
+    val fresh0 = Seq("zz-new-0", "zz-new-1")
+    merge(updated.map(k => (k, "u1", "upsert")) ++ deleted.map(k => (k, "x", "delete")) ++
+      reinserted.map(k => (k, "x", "delete")) ++ fresh0.map(k => (k, "i1", "upsert")))
+    merge(updated.take(5).map(k => (k, "u2", "upsert")) ++
+      reinserted.map(k => (k, "r2", "upsert")) ++ Seq((fresh0.head, "x", "delete")))
+    merge(updated.drop(8).map(k => (k, "x", "delete")) ++ Seq((ids(700), "u3", "upsert")))
+    assert(t.metadata.currentSnapshot.exists(_.deletes.size == 3))
+    (t.root.toString, model, Map(
+      "live" -> ids.slice(900, 905), "updated" -> (updated :+ ids(700)),
+      "deleted" -> deleted, "re-inserted" -> reinserted,
+      "absent" -> (fresh0.take(1) ++ Seq("doc-none", ids(42) + "x"))))
+  }
+
+  private def checkLookups(t: TokenTable): Unit = {
+    val (_, model, keys) = stacked
+    keys.foreach { case (cls, ks) => ks.foreach { k =>
+      val got = t.lookup(spark, k).select("source").collect().map(_.getString(0)).toSeq
+      assert(got == model.get(k).toSeq, s"$cls key $k: got $got, model ${model.get(k)}")
+    } }
+    assert(keys("absent").forall(k => !model.contains(k)))
+    val scanned = t.scan(spark).select("doc_id", "source").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(scanned == model)
+  }
+
+  test("lookups and scans after stacked MoR merges match the model (driver-side deletes)") {
+    val t = TokenTable.load(spark, stacked._1)
+    checkLookups(t)
+    assert(t.deleteKeyCacheState._1.nonEmpty, "the driver path loaded no key set")
+  }
+
+  test("lookups and scans after stacked MoR merges match the model (anti-join deletes)") {
+    val t = TokenTable.load(spark, stacked._1)
+    withJoinDeletes(checkLookups(t))
+    assert(t.deleteKeyCacheState._1.isEmpty, "the join path loaded keys on the driver")
+  }
+
+  test("a lookup whose every candidate file is masked runs no Spark job") {
+    val t = TokenTable.load(spark, stacked._1)
+    val (_, model, keys) = stacked
+    val sc = spark.sparkContext
+    def jobs(k: String): Int = {
+      val group = s"lookup-${java.util.UUID.randomUUID()}"
+      sc.setJobGroup(group, "lookup")
+      try t.lookup(spark, k).collect() finally sc.clearJobGroup()
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    keys("deleted").foreach(k => assert(jobs(k) == 0, s"deleted key $k ran a job"))
+    // the counter sees a lookup that reads files; the masked old copy of an
+    // updated key costs no second job either
+    (keys("live") ++ keys("updated").filter(model.contains)).foreach(k =>
+      assert(jobs(k) == 1, s"key $k"))
+  }
+
+  test("lookup and scan take files and deletes from one metadata view") {
+    // A MoR commit on the same instance between reading the files and
+    // reading the deletes would mask the old row while the new file is
+    // still missing: the key would read as absent.
+    val t = fresh("mor-view")
+    val d0 = t.scan(spark).select(min(col("doc_id"))).head.getString(0)
+    val before = t.lookup(spark, d0).select("source").head.getString(0)
+    import spark.implicits._
+    def upsert(src: String) = Seq((d0, Seq(4), 1, src, "upsert"))
+      .toDF("doc_id", "tokens", "n_tok", "source", "_op")
+    def armMerge(src: String): Unit = graft.maintenance.Failpoints.armCallback(
+      "table.read.after-meta")(() => Maintenance.mergeMor(spark, t, upsert(src)))
+    try {
+      armMerge("v1")
+      val got = t.lookup(spark, d0).select("source").collect().map(_.getString(0)).toSeq
+      assert(got == Seq(before) || got == Seq("v1"), s"lookup during a commit got $got")
+      armMerge("v2")
+      val scanned = t.scan(spark).filter(col("doc_id") === d0)
+        .select("source").collect().map(_.getString(0)).toSeq
+      assert(scanned == Seq("v1") || scanned == Seq("v2"), s"scan during a commit got $scanned")
+    } finally graft.maintenance.Failpoints.reset()
+    assert(t.lookup(spark, d0).select("source").collect().map(_.getString(0)).toSeq == Seq("v2"))
+    assert(t.scan(spark).count() == 1000)
+  }
+
   test("merge_mor runs from the YAML pipeline DSL") {
     val t = fresh("mor-dsl")
     val b = batch(t)

@@ -30,14 +30,23 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * doGenCode fails to compile aborts the query instead of silently
     * degrading to interpreted eval — so identity tests run under this prove
     * the generated path, not the fallback. */
-  def withCodegenOnly[A](body: => A): A = {
-    val key = "spark.sql.codegen.factoryMode"
+  def withCodegenOnly[A](body: => A): A =
+    withConf("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")(body)
+
+  /** Run `body` with session conf `key` set to `value`, restoring the
+    * previous setting (or unsetting it) afterwards. */
+  def withConf[A](key: String, value: String)(body: => A): A = {
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "CODEGEN_ONLY")
+    spark.conf.set(key, value)
     try body
     finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None    => spark.conf.unset(key)
     }
   }
+
+  /** Run `body` with `spark.sql.autoBroadcastJoinThreshold = -1`: reads
+    * apply pending merge-on-read deletes by anti-join, never on the driver. */
+  def withJoinDeletes[A](body: => A): A =
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(body)
 }
